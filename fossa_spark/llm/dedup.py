@@ -19,12 +19,15 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+import logging
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from fossa_spark.llm.text import tokens
+
+_log = logging.getLogger(__name__)
 
 
 def normalize(col: Column | str) -> Column:
@@ -258,12 +261,6 @@ def ngram_jaccard_pairs(
     return pairs
 
 
-# Bump when anything upstream of the verified pair relation changes
-# semantics (tokenization, hash family, prefix filter, jaccard math) —
-# the staged cache below must never serve rows an older algorithm wrote.
-_PAIR_ALGO_VERSION = 1
-
-
 def staged_ngram_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -271,36 +268,23 @@ def staged_ngram_pairs(
     k: int = 5,
     min_jaccard: float = 0.5,
     max_df: int = 100,
-    cache_root: str | None = None,
 ) -> DataFrame:
-    """:func:`ngram_jaccard_pairs`, staged to parquet once per corpus
-    fingerprint (VERDICT r5 item 3).
+    """:func:`ngram_jaccard_pairs`, staged to parquet once per corpus per
+    process (VERDICT r5 item 3).
 
     Three query-inventory consumers (q_dedup_ngram, q_cluster_keep,
     q_split_leakage_safe) derive from the SAME verified near-dup pair
     relation; recomputing the shingle → prefix-join → verify chain per
-    consumer tripled the dominant cost of the sf1 tail.  This is the
-    build_minhash_index persistence pattern applied to the pair relation:
-    the first consumer computes and writes it, later consumers (same
-    session or not) read ~KBs of parquet.  At 100 TB this is also the
-    operational shape — the pair relation is per-corpus-snapshot state,
-    not per-query work.
-
-    Correctness: the cache key is sha256 over (algo version, k,
-    min_jaccard, max_df, and every input file's path+size+mtime_ns), so
-    a changed corpus or changed parameters can never serve stale rows;
-    the relation itself is deterministic (exact counts, int64 hashes), so
-    write-then-read is value-identical to direct computation.  Any cache
-    I/O failure falls back to computing directly — staging is an
-    optimization, never a correctness dependency.  Non-file-backed
-    inputs (no ``inputFiles()``) skip staging entirely.
-    """
+    consumer tripled the dominant cost of the sf1 tail.  The first
+    consumer computes and writes it, later consumers in the session read
+    ~KBs of parquet.  The relation is deterministic (exact counts, int64
+    hashes), so write-then-read is value-identical to direct computation;
+    the staging key and fallbacks are :func:`_staged_parquet`'s."""
     return _staged_parquet(
         df,
         lambda: ngram_jaccard_pairs(df, text_col, id_col, k, min_jaccard, max_df),
         prefix="ngram_pairs",
-        params=[_PAIR_ALGO_VERSION, k, min_jaccard, max_df, text_col, id_col],
-        cache_root=cache_root,
+        params=["ngram_pairs_v1", k, min_jaccard, max_df, text_col, id_col],
     )
 
 
@@ -309,101 +293,43 @@ def staged_shingle_rows(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    cache_root: str | None = None,
 ) -> DataFrame:
-    """:func:`shingle_hash_rows`, staged to parquet once per corpus
-    fingerprint — the :func:`staged_ngram_pairs` pattern one level
-    further upstream (round 6).
+    """:func:`shingle_hash_rows`, staged to parquet once per corpus per
+    process — the :func:`staged_ngram_pairs` pattern one level further
+    upstream (round 6).
 
     The (id, _sh int64) relation is the shared input of the whole
     MinHash family (signatures, LSH buckets, exact-Jaccard verify); the
     q_dedup_near / q_dedup_minhash_exact / q_dedup_containment queries
-    each recomputed the corpus-wide Arrow pass.  Per-corpus-snapshot
-    state belongs in storage, computed once — at 100 TB this relation IS
-    the staged tokenization table a production dedup pipeline
-    materializes before any signature work.
-
-    ONLY sound for a df read directly from files: the fingerprint is
-    (algo version, k, cols, input file path+size+mtime), so a FILTERED
-    or otherwise derived frame would collide with its base corpus —
-    callers with derived inputs (e.g. the pipeline's post-exact-dedup
-    stage) must keep calling :func:`shingle_hash_rows` directly.
-    _staged_parquet already skips frames whose lineage has non-file
-    sources, but it cannot detect a filter over the same files; the
-    caller contract does."""
+    each recomputed the corpus-wide Arrow pass.  The key covers the
+    frame's analyzed plan, so a filtered or otherwise derived frame over
+    the same files gets its own entry."""
     return _staged_parquet(
         df,
         lambda: shingle_hash_rows(df, text_col, id_col, k),
         prefix=f"shingle_rows_k{k}",
         params=["shingle_rows_v1", k, text_col, id_col],
-        cache_root=cache_root,
     )
 
 
-def _staged_parquet(
-    df: DataFrame,
-    compute,
-    prefix: str,
-    params: list,
-    cache_root: str | None = None,
-) -> DataFrame:
-    """Stage ``compute()``'s result to parquet keyed by (params + the
-    input files' path/size/mtime fingerprint); serve later calls from
-    the staged copy.  Falls back to computing directly on any cache or
-    fingerprint failure — staging is an optimization, never a
-    correctness dependency.  See staged_ngram_pairs' docstring for the
-    key-soundness argument."""
-    import hashlib
-    import json
-    import os
-    import shutil
-    import uuid
+def _staged_parquet(df: DataFrame, compute, prefix: str, params: list) -> DataFrame:
+    """``compute()``'s relation, written to parquet once per (``prefix``,
+    ``params``, ``df``) per process and read in place by every call (the
+    stage memo in :mod:`fossa_spark.sources`, keyed on ``df``'s analyzed
+    plan and input files).  A non-file-backed ``df`` computes directly;
+    so does any staging failure, after a logged warning — staging is an
+    optimization, never a correctness dependency."""
+    from fossa_spark.sources import _memo
 
     try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        files = []
-    if not files:
-        return compute()
-    try:
-        stats = []
-        for f in files:
-            p = f.removeprefix("file:")
-            st = os.stat(p)
-            stats.append((p, st.st_size, st.st_mtime_ns))
-    except OSError:
-        return compute()
-    key = hashlib.sha256(json.dumps(params + [stats]).encode()).hexdigest()[:24]
-    from fossa_spark.sources import _default_cache_root
-
-    root = cache_root or _default_cache_root()
-    final = os.path.join(root, f"{prefix}_{key}")
-    spark = df.sparkSession
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return spark.read.parquet(final)
-    out = compute()
-    try:
-        os.makedirs(root, exist_ok=True)
-        # prune: fixture regeneration changes mtimes → new keys every
-        # round; keep the newest entries per prefix so the cache can't
-        # grow unboundedly across rounds
-        entries = sorted(
-            (e for e in os.listdir(root) if e.startswith(f"{prefix}_")),
-            key=lambda e: os.path.getmtime(os.path.join(root, e)),
-        )
-        for stale in entries[:-15]:
-            shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
-        tmp = os.path.join(root, f"_tmp_{key}_{uuid.uuid4().hex}")
-        out.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, final)  # atomic: losers of the race fall through
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.exists(os.path.join(final, "_SUCCESS")):
-            return spark.read.parquet(final)
-    except Exception:
-        pass  # staging failed — the computed relation is still correct
-    return out
+        staged = _memo(df, prefix, params,
+                       lambda into: compute().write.parquet(into))
+        if staged is not None:
+            return df.sparkSession.read.parquet(staged[0])
+    except Exception as e:  # noqa: BLE001 - staging is an optimization
+        _log.warning("staging %s failed, computing directly: %r", prefix, e,
+                     exc_info=True)
+    return compute()
 
 
 def containment_pairs(
@@ -800,15 +726,14 @@ def staged_exact_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     buckets: int = 16,
-    cache_root: str | None = None,
 ) -> str:
-    """:func:`build_exact_index`, staged per corpus fingerprint — the
+    """:func:`build_exact_index`, staged once per corpus per process — the
     staged_minhash_index pattern for the digest table, for callers that
-    MUTATE their index per run (the streaming ingest loop appends every
-    batch's novel hashes): the cached build is immutable, each run gets a
-    hard-linked copy registered as ``{table_prefix}_digest`` with the
-    same CLUSTERED BY spec, so appends stay run-local and probes stay
-    shuffle-free.  Returns the digest table name."""
+    MUTATE their index (the streaming ingest loop appends every batch's
+    novel hashes): each call gets a hard-linked copy registered as
+    ``{table_prefix}_digest`` with the same CLUSTERED BY spec, so appends
+    stay in the caller's copy and probes stay shuffle-free.  Returns the
+    digest table name."""
     from fossa_spark.sources import stage_bucketed_tables
 
     def build(prefix: str, path: str) -> None:
@@ -816,24 +741,13 @@ def staged_exact_index(
             corpus, spark, f"{prefix}_digest", f"{path}/digest",
             text_col, id_col, buckets,
         )
-        # completion marker table (the stage machinery keys on meta/_SUCCESS)
-        corpus.sparkSession.createDataFrame(
-            [(1,)], "format_version int"
-        ).write.mode("overwrite").option("path", f"{path}/meta").saveAsTable(
-            f"{prefix}_meta"
-        )
 
     stage_bucketed_tables(
-        corpus,
-        spark,
-        table_prefix,
-        work_dir,
+        corpus, spark, table_prefix, work_dir,
         cache_prefix="exact_idx",
-        params=["exact_idx_v1", buckets, text_col, id_col],
-        tables={"digest": ("text_hash", "text_hash"), "meta": None},
-        buckets=buckets,
-        build=build,
-        cache_root=cache_root,
+        params=[buckets, text_col, id_col],
+        tables={"digest": ("text_hash", "text_hash")},
+        buckets=buckets, build=build,
     )
     return f"{table_prefix}_digest"
 
@@ -929,33 +843,23 @@ def staged_minhash_index(
     num_hashes: int = 16,
     bands: int = 8,
     buckets: int = 16,
-    cache_root: str | None = None,
 ) -> None:
-    """:func:`build_minhash_index`, staged per corpus fingerprint
-    (round 7, VERDICT r6 item 3) — the :func:`staged_ngram_pairs`
-    pattern applied to the index itself.
+    """:func:`build_minhash_index`, staged once per corpus per process
+    (round 7, VERDICT r6 item 3).
 
-    The streaming near-dedup query (and any daily incremental loop
-    restarted from scratch) paid a full index cold-build per run even
-    though the corpus had not changed; the index is per-corpus-snapshot
-    state, so build it once into the stage cache and serve later runs
-    from there.  Because callers MUTATE their index (the between-batch
-    ``append_to_minhash_index`` folds), the staged copy is IMMUTABLE:
-    each call copies the bucketed parquet files into ``work_dir`` (an
-    OS-level file copy preserves the bucket layout — Spark derives the
-    bucket id from the file name) and registers fresh catalog tables
-    under ``table_prefix`` with the same CLUSTERED BY spec, so the
-    zero-shuffle probe property and append re-clustering survive
-    verbatim (prototype-verified: copied table plans `Bucketed: true`,
-    no index-side Exchange; insertInto grows the copy, never the cache).
-
-    Key soundness and the copy/DDL mechanics live in
-    :func:`fossa_spark.sources.stage_bucketed_tables` (round 7 factored
-    the machinery out so the IVF index could stage the same way): the
-    fingerprint includes the corpus's normalized ANALYZED-PLAN string,
-    so FILTERED/derived variants of the same files (the streaming
-    query's corpus is a doc_id % filter over documents.parquet) are
-    safe.  Any staging failure falls back to a direct build.
+    The index is per-corpus-snapshot state: the streaming near-dedup
+    query and any incremental loop restarted from scratch would otherwise
+    pay a full index build per call.  Because callers MUTATE their index
+    (the between-batch ``append_to_minhash_index`` folds), each call gets
+    a hard-linked copy in ``work_dir`` registered under ``table_prefix``
+    with the same CLUSTERED BY spec, so the zero-shuffle probe and append
+    re-clustering survive verbatim (copied table plans show `Bucketed:
+    true`, no index-side Exchange; insertInto grows the copy, never the
+    memo entry).  Mechanics and key: see
+    :func:`fossa_spark.sources.stage_bucketed_tables` — the key covers the
+    corpus's analyzed plan, so FILTERED variants of the same files (the
+    streaming query's corpus is a doc_id % filter over documents.parquet)
+    get their own entries.
     """
     from fossa_spark.sources import stage_bucketed_tables
 
@@ -966,22 +870,12 @@ def staged_minhash_index(
         )
 
     stage_bucketed_tables(
-        corpus,
-        spark,
-        table_prefix,
-        work_dir,
+        corpus, spark, table_prefix, work_dir,
         cache_prefix="minhash_idx",
-        params=["minhash_idx_v1", INDEX_FORMAT_VERSION, k, num_hashes,
-                bands, buckets, text_col, id_col],
-        tables={
-            "bands": ("bucket", "bucket"),
-            "shingles": (id_col, id_col),
-            "sizes": (id_col, id_col),
-            "meta": None,
-        },
-        buckets=buckets,
-        build=build,
-        cache_root=cache_root,
+        params=[k, num_hashes, bands, buckets, text_col, id_col],
+        tables={"bands": ("bucket", "bucket"), "shingles": (id_col, id_col),
+                "sizes": (id_col, id_col), "meta": None},
+        buckets=buckets, build=build,
     )
     _check_index_format(spark, table_prefix)
 
@@ -1471,30 +1365,16 @@ def staged_simhash_wide(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cache_root: str | None = None,
 ) -> DataFrame:
-    """:func:`simhash_table_wide` staged to parquet once per corpus
-    fingerprint — the staged_simhash_table contract (the 120-aggregate
-    pass is per-corpus-snapshot state)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_simhashw_")
-
-    def build(into: str) -> None:
-        simhash_table_wide(df, text_col, id_col).write.mode(
-            "overwrite"
-        ).parquet(into)
-
-    stage_files(
-        df, out,
-        cache_prefix="simhash_wide",
-        params=["simhash_wide_v1", text_col, id_col],
-        build=build,
-        cache_root=cache_root,
+    """:func:`simhash_table_wide` staged to parquet once per corpus per
+    process — the staged_simhash_table contract (the 120-aggregate pass
+    is per-corpus-snapshot state)."""
+    return _staged_parquet(
+        df,
+        lambda: simhash_table_wide(df, text_col, id_col),
+        prefix="simhash_wide",
+        params=[text_col, id_col],
     )
-    return df.sparkSession.read.parquet(out)
 
 
 def staged_simhash_table(
@@ -1502,36 +1382,20 @@ def staged_simhash_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 64,
-    cache_root: str | None = None,
     bit_source: str = "xxhash64",
 ) -> DataFrame:
-    """:func:`simhash_table`, staged to parquet once per corpus
-    fingerprint (round 8) — the staged_shingle_rows idea for the SimHash
+    """:func:`simhash_table`, staged to parquet once per corpus per
+    process (round 8) — the staged_shingle_rows idea for the SimHash
     family: the signature pass is 64 conditional aggregates whose
     codegen alone costs ~2 s per action at any data size, and the table
     is per-corpus-snapshot state a production pipeline materializes
-    once.  Served via hard links (sources.stage_files); only sound for a
-    df read directly from files (same contract as staged_shingle_rows —
-    the fingerprint covers the input files + analyzed plan)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_simhash_")
-
-    def build(into: str) -> None:
-        simhash_table(df, text_col, id_col, bits, bit_source).write.mode(
-            "overwrite"
-        ).parquet(into)
-
-    stage_files(
-        df, out,
-        cache_prefix="simhash_tab",
-        params=["simhash_tab_v1", bits, text_col, id_col, bit_source],
-        build=build,
-        cache_root=cache_root,
+    once."""
+    return _staged_parquet(
+        df,
+        lambda: simhash_table(df, text_col, id_col, bits, bit_source),
+        prefix="simhash_tab",
+        params=[bits, text_col, id_col, bit_source],
     )
-    return df.sparkSession.read.parquet(out)
 
 
 def simhash_pairs(
@@ -2439,31 +2303,17 @@ def staged_span_anchors(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    cache_root: str | None = None,
 ) -> DataFrame:
-    """:func:`span_anchors` staged to parquet once per corpus
-    fingerprint — the anchor table is per-corpus-snapshot index state
-    (34.5M rows at sf10; rebuilding the gram strings + md5 every run
-    was the dominant cost of the first-cut q_dedup_span)."""
-    import tempfile
-
-    from fossa_spark.sources import stage_files
-
-    out = tempfile.mkdtemp(prefix="fossa_spananch_")
-
-    def build(into: str) -> None:
-        span_anchors(df, text_col, id_col, k).write.mode(
-            "overwrite"
-        ).parquet(into)
-
-    stage_files(
-        df, out,
-        cache_prefix="span_anchors",
-        params=["span_anchors_v1", k, text_col, id_col],
-        build=build,
-        cache_root=cache_root,
+    """:func:`span_anchors` staged to parquet once per corpus per process
+    — the anchor table is per-corpus-snapshot index state (34.5M rows at
+    sf10; rebuilding the gram strings + md5 per consumer was the dominant
+    cost of the first-cut q_dedup_span)."""
+    return _staged_parquet(
+        df,
+        lambda: span_anchors(df, text_col, id_col, k),
+        prefix="span_anchors",
+        params=[k, text_col, id_col],
     )
-    return df.sparkSession.read.parquet(out)
 
 
 def shared_span_pairs(

@@ -84,8 +84,17 @@ class TrainingDataPipeline(Model):
 
         # near-dedup: connected components over the verified pair graph,
         # keep the minimum id of each component (handles duplicate CHAINS
-        # A≈B≈C where pairwise dropping could keep both endpoints)
-        pairs = D.minhash_lsh_dedup(exact, threshold=self.near_dedup_threshold)
+        # A≈B≈C where pairwise dropping could keep both endpoints).  Its
+        # eager pair jobs read `exact` through a lineage cut: a job whose
+        # plan carried an observed node from build() would complete that
+        # Observation, and with no candidate pairs AQE prunes the scan
+        # from the final plan, completing it EMPTY.  The cut leaves the
+        # write as the first action over the observed plan; it reads the
+        # source count from the cached relation.
+        pairs = D.minhash_lsh_dedup(
+            exact.select("doc_id", "text").localCheckpoint(eager=False),
+            threshold=self.near_dedup_threshold,
+        )
         comps = D.connected_components(pairs)
         drop = comps.filter(F.col("doc_id") != F.col("component")).select("doc_id")
         clean = exact.join(drop, "doc_id", "left_anti")

@@ -327,11 +327,10 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     same retention + placement + digest math in SQL.  Any lost,
     duplicated, mutated, or mis-placed row moves a manifest cell.
 
-    The artifact is per-corpus-deterministic, so it is served from the
-    stage cache via hard links (round-8 review item: the first cut wrote
-    a full curated-corpus copy into a fresh temp dir every run)."""
-    import tempfile
-
+    The artifact is per-corpus-deterministic, so it is staged once per
+    process and its manifest read in place (round-8 review item: the
+    first cut wrote a full curated-corpus copy into a fresh temp dir
+    every run)."""
     from fossa_spark.sources import stage_files
 
     d = load(spark, sf_dir, "documents")
@@ -339,13 +338,12 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b"
     )
     comp = D.connected_components(pairs)
-    out_dir = tempfile.mkdtemp(prefix="fossa_shards_")
 
     def _build(into: str) -> None:
         C.write_training_shards(d, comp, into, n_shards=16)
 
-    stage_files(
-        d, out_dir,
+    out_dir = stage_files(
+        d, None,
         cache_prefix="shard_full",
         params=["shard_full_v2", 16],
         build=_build,
@@ -356,9 +354,9 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_shard_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL shard append (round 8, llm/curation.py
     append_to_shards) — the daily-batch close of the loop: the corpus
-    (doc_id % 4 != 0) lives as a base shard layout (served from the
-    stage cache — per-corpus-deterministic bytes, hard-linked per run;
-    appends only ADD files, so links never reach back into the cache);
+    (doc_id % 4 != 0) lives as a base shard layout (staged once per
+    process and hard-linked into this call's dir; appends only ADD
+    files, so links never reach back into the staged entry);
     the arriving batch (doc_id % 4 == 0, plus planted exact copies of
     corpus docs with doc_id % 16 == 1 under +10_000_000 ids) probes the
     persisted exact digest index, and only the NOVEL docs are placed —
@@ -393,7 +391,7 @@ def q_shard_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build_base(into: str) -> None:
         # the base manifest is materialized as part of the build (the
         # write happens inside write_training_shards); only the files
-        # matter for the cache
+        # are staged
         C.write_training_shards(corpus, empty_comp, into, n_shards=16)
 
     from fossa_spark.sources import stage_files
@@ -420,10 +418,10 @@ def q_shard_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     order damage (``first_doc`` keys on it) — hash-mismatches.  File-count
     reduction is pinned in tests/test_curation.py.
 
-    Compaction MUTATES its layout, so the base is a fresh per-run
-    hard-link serve from the stage cache (links share inodes, not
-    directory entries: renaming/deleting the work-dir tree never reaches
-    back into the cache)."""
+    Compaction MUTATES its layout, so the base is a hard-linked copy of
+    the staged entry (links share inodes, not directory entries:
+    renaming/deleting the work-dir tree never reaches back into the
+    entry)."""
     import hashlib
     import tempfile
 
@@ -453,7 +451,7 @@ def q_shard_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_files(
         d, shard_dir,
         cache_prefix="shard_base",
-        params=["shard_base_v2", 16],  # shares q_shard_delta's cache entry
+        params=["shard_base_v2", 16],  # shares q_shard_delta's memo entry
         build=_build_base,
     )
     C.append_to_shards(batch, keep, shard_dir, n_shards=16)
@@ -473,22 +471,20 @@ def q_shard_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer misplaced, any order the reader breaks (e.g. relying on file
     order instead of pos_key), any off-by-one in the resume offset
     mismatches."""
-    import tempfile
+    from fossa_spark.sources import stage_files
 
     d = load(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     empty_comp = spark.createDataFrame([], "doc_id long, component long")
-    shard_dir = tempfile.mkdtemp(prefix="fossa_shard_epoch_")
 
     def _build_base(into: str) -> None:
         C.write_training_shards(corpus, empty_comp, into, n_shards=16)
 
-    from fossa_spark.sources import stage_files
-
-    stage_files(
-        d, shard_dir,
+    # read-only: q_shard_delta's memo entry, in place
+    shard_dir = stage_files(
+        d, None,
         cache_prefix="shard_base",
-        params=["shard_base_v2", 16],  # shares the q_shard_delta cache entry
+        params=["shard_base_v2", 16],
         build=_build_base,
     )
     return (

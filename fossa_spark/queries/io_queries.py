@@ -519,10 +519,11 @@ def _orders_version_chain(base: DataFrame, into: str, *,
 
 def _staged_version_chain(spark: SparkSession, sf_dir: str, *,
                           vacuum: bool) -> str:
-    """The chain above, served from the stage cache (per-corpus
-    deterministic bytes). The cache key includes the vacuum flag AND a
-    build-recipe version, so editing the builder can never leave one
-    consumer reading another's stale artifact."""
+    """The chain above, staged once per process (per-corpus
+    deterministic bytes) and hard-linked into a fresh dir per call:
+    consumers commit onto (q_clone_versioned forks) their own copy.  The
+    key includes the vacuum flag, so the two variants never share an
+    entry."""
     import os
     import tempfile as _tf
 
@@ -551,7 +552,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle re-derives each version's exact membership and payload
     state from orders, so a fold slip, a lost tombstone, or a
     vacuum-destroyed row moves a cell. The artifact is per-corpus
-    deterministic and served from the stage cache."""
+    deterministic and staged once per process."""
     from fossa_spark import versioned as V
 
     tbl = _staged_version_chain(spark, sf_dir, vacuum=True)
@@ -584,8 +585,8 @@ def q_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of(1) and as-of(4): the oracle derives the v1 state from orders
     ONCE and expects it under both version labels, so any key the
     rollback missed, resurrected, or double-restored moves a cell.
-    The staged chain is hard-linked per run, so the restore commit
-    mutates only this run's copy (never the stage cache)."""
+    The staged chain is hard-linked per call, so the restore commit
+    mutates only this call's copy (never the staged entry)."""
     from fossa_spark import versioned as V
 
     tbl = _staged_version_chain(spark, sf_dir, vacuum=False)
@@ -655,7 +656,6 @@ def q_evolve_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orders; a lost backfill, dropped tombstone, or mis-folded
     evolved row moves a cell."""
     import os as _os
-    import tempfile as _tf
 
     from fossa_spark import versioned as V
     from fossa_spark.sources import stage_files
@@ -690,9 +690,8 @@ def q_evolve_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         V.commit(tbl, v2, expect_version=1)
 
-    out_dir = _tf.mkdtemp(prefix="fossa_vevolve_")
-    stage_files(base, out_dir, cache_prefix="vchain_evolve",
-                params=["vchain_evolve_v1"], build=_build)
+    out_dir = stage_files(base, None, cache_prefix="vchain_evolve",
+                          params=["vchain_evolve_v1"], build=_build)
     tbl = _os.path.join(out_dir, "tbl")
 
     def audit(v: int) -> DataFrame:
@@ -733,7 +732,6 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold + one key-only membership join + an O(source) commit — the
     same table-side cost Delta's MERGE pays in its rewrite step."""
     import os as _os
-    import tempfile as _tf
 
     from fossa_spark import versioned as V
     from fossa_spark.sources import stage_files
@@ -756,9 +754,8 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         V.merge_into(spark, tbl, src, delete_condition=(k % 10 == 0))
 
-    out_dir = _tf.mkdtemp(prefix="fossa_vmerge_")
-    stage_files(base, out_dir, cache_prefix="vchain_merge",
-                params=["vchain_merge_v1"], build=_build)
+    out_dir = stage_files(base, None, cache_prefix="vchain_merge",
+                          params=["vchain_merge_v1"], build=_build)
     tbl = _os.path.join(out_dir, "tbl")
     feed = V.change_feed(spark, tbl, 1, 2)
     return (
@@ -783,7 +780,7 @@ def q_clone_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     clone that leaked its divergent commit back moves them) and the
     clone cells must reflect exactly the extra tombstones (a fork that
     lost shared history moves those).  The staged chain is hard-linked
-    per run, so the fork mutates only this run's copy."""
+    per call, so the fork mutates only this call's copy."""
     from fossa_spark import versioned as V
 
     tbl = _staged_version_chain(spark, sf_dir, vacuum=False)

@@ -283,10 +283,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The index build is idempotent per (session, sf): the operational shape
     is build-once / probe-per-batch, so repeat runs (bench warm pass, the
     driver's second execution) skip straight to the probe — exactly what a
-    daily-batch job does against yesterday's index.  Round 7: the
-    first-in-session build serves from the cross-session stage cache
-    (staged_minhash_index), so even the cold pass pays a file copy, not
-    the corpus-wide signature build."""
+    daily-batch job does against yesterday's index.  Round 7: the build
+    is staged (staged_minhash_index), so a rebuild under a new prefix in
+    the same process pays a hard-link copy, not the corpus-wide
+    signature build."""
     import hashlib
     import tempfile
 
@@ -355,13 +355,12 @@ def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite hash-mismatches.  File-count reduction and plan
     invariance are pinned in tests/test_llm.py.
 
-    The index MUTATES here (append + compact), so every run works on its
-    own copy and drops it in a finally block — but the day-0 BUILD is a
-    pure function of the corpus slice, so the copy is served from the
-    stage cache (staged_exact_index hard-links the immutable cached
-    files into a per-run work_dir; appends and the compaction swap only
-    ever touch the run-local directory entries, never the cached
-    inodes)."""
+    The index MUTATES here (append + compact), so every call works on
+    its own copy and drops it in a finally block — but the day-0 BUILD
+    is a pure function of the corpus slice, so it is staged once per
+    process (staged_exact_index hard-links the immutable staged files
+    into a per-call work_dir; appends and the compaction swap only ever
+    touch that dir's entries, never the staged inodes)."""
     import hashlib
     import shutil
     import tempfile
@@ -413,26 +412,24 @@ def q_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The trained model (weights + centering constant) is a deterministic
     pure function of (corpus, hyperparams) — integers all the way down —
-    so it is served from the stage cache per corpus fingerprint (the
-    q_shard_manifest convention): later runs pay only the scoring pass,
-    and the oracle still re-derives the FULL training, so a stale or
-    corrupted cached model hash-mismatches.  Training itself stays
+    so it is staged once per corpus per process (the q_shard_manifest
+    convention): later consumers in the session pay only the scoring
+    pass, and the oracle still re-derives the FULL training, so a stale
+    or corrupted staged model hash-mismatches.  Training itself stays
     exercised by pytest (accuracy + rerun-determinism pins)."""
     import os
-    import tempfile
 
     from fossa_spark.sources import stage_files
 
     d = load(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="fossa_qlr_")
 
     def _build(into: str) -> None:
         w, mt = CL.train_quality_lr(d, label=(F.col("n_chars") >= 300), iters=3)
         w.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "w"))
         mt.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "m"))
 
-    stage_files(d, work, cache_prefix="quality_lr",
-                params=["quality_lr_v1", 3, 256, 300], build=_build)
+    work = stage_files(d, None, cache_prefix="quality_lr",
+                       params=["quality_lr_v1", 3, 256, 300], build=_build)
     w = spark.read.parquet(os.path.join(work, "w"))
     # re-aggregate the 1-row centering relation into a zero-key aggregate
     # so the crossJoin(broadcast(·)) inside scoring stays PLAN-PROVABLY
@@ -3618,23 +3615,21 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift anywhere in training, scoring, clamping, or ranking moves the
     statistic."""
     import os
-    import tempfile
 
     from pyspark.sql.window import Window as W
 
     from fossa_spark.sources import stage_files
 
     d = load(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="fossa_qlr_auc_")
 
     def _build(into: str) -> None:
         w, mt = CL.train_quality_lr(d, label=(F.col("n_chars") >= 300), iters=3)
         w.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "w"))
         mt.coalesce(1).write.mode("overwrite").parquet(os.path.join(into, "m"))
 
-    # same cache key as q_quality_model: one shared trained model
-    stage_files(d, work, cache_prefix="quality_lr",
-                params=["quality_lr_v1", 3, 256, 300], build=_build)
+    # same memo key as q_quality_model: one shared trained model
+    work = stage_files(d, None, cache_prefix="quality_lr",
+                       params=["quality_lr_v1", 3, 256, 300], build=_build)
     w = spark.read.parquet(os.path.join(work, "w"))
     mt = spark.read.parquet(os.path.join(work, "m")).agg(
         F.min("mt").alias("mt")

@@ -707,45 +707,53 @@ def test_bpe_apply_roundtrip(spark):
     assert out0[1].n_pieces == len("ababababcd")
 
 
+def _staged_keys(prefix: str) -> set:
+    from fossa_spark import sources
+
+    return {k for k in sources._STAGED if k.startswith(prefix)}
+
+
+def _file_copy(spark, df, tmp_path):
+    """``df`` rewritten to fresh parquet files: staging keys on the input
+    files, so a copy starts with no memo entries from earlier tests."""
+    df.write.parquet(str(tmp_path / "copy"))
+    return spark.read.parquet(str(tmp_path / "copy"))
+
+
 def test_staged_ngram_pairs_identity_and_cache(spark, docs, tmp_path):
     """staged_ngram_pairs must be value-identical to ngram_jaccard_pairs,
-    hit its parquet cache on the second call, and key the cache on
-    parameters (different min_jaccard → different staging dir)."""
-    import os
-
-    root = str(tmp_path / "stage")
+    hit its memo entry on the second call, and key the memo on
+    parameters (different min_jaccard → a new entry)."""
+    docs = _file_copy(spark, docs, tmp_path)
+    before = _staged_keys("ngram_pairs_")
     direct = {
         (r.id_a, r.id_b, r.n_a, r.n_b, r.n_inter, round(r.jaccard, 9))
         for r in D.ngram_jaccard_pairs(docs, k=5, min_jaccard=0.5).collect()
     }
     staged1 = {
         (r.id_a, r.id_b, r.n_a, r.n_b, r.n_inter, round(r.jaccard, 9))
-        for r in D.staged_ngram_pairs(
-            docs, k=5, min_jaccard=0.5, cache_root=root
-        ).collect()
+        for r in D.staged_ngram_pairs(docs, k=5, min_jaccard=0.5).collect()
     }
     assert staged1 == direct and direct
-    dirs = [d for d in os.listdir(root) if d.startswith("ngram_pairs_")]
-    assert len(dirs) == 1
-    # second call must READ (no new dirs, same rows)
+    assert len(_staged_keys("ngram_pairs_") - before) == 1
+    # second call must READ (no new entry, same rows)
     staged2 = {
         (r.id_a, r.id_b, r.n_a, r.n_b, r.n_inter, round(r.jaccard, 9))
-        for r in D.staged_ngram_pairs(
-            docs, k=5, min_jaccard=0.5, cache_root=root
-        ).collect()
+        for r in D.staged_ngram_pairs(docs, k=5, min_jaccard=0.5).collect()
     }
     assert staged2 == direct
-    assert len([d for d in os.listdir(root) if d.startswith("ngram_pairs_")]) == 1
+    assert len(_staged_keys("ngram_pairs_") - before) == 1
     # parameter change → new key, not a stale read
-    D.staged_ngram_pairs(docs, k=5, min_jaccard=0.7, cache_root=root).collect()
-    assert len([d for d in os.listdir(root) if d.startswith("ngram_pairs_")]) == 2
+    D.staged_ngram_pairs(docs, k=5, min_jaccard=0.7).collect()
+    assert len(_staged_keys("ngram_pairs_") - before) == 2
     # non-file-backed input: staging skipped, still correct
     mem = spark.createDataFrame(
         [(1, "a b c d e f g"), (2, "a b c d e f g h")],
         "doc_id long, text string",
     )
-    out = D.staged_ngram_pairs(mem, k=5, min_jaccard=0.1, cache_root=root)
+    out = D.staged_ngram_pairs(mem, k=5, min_jaccard=0.1)
     assert out.count() == 1
+    assert len(_staged_keys("ngram_pairs_") - before) == 2
 
 
 def test_setsim_candidate_mass_matches_join(spark, docs):
@@ -832,21 +840,26 @@ def test_rrf_fuse_hand_example(spark):
 
 def test_staged_shingle_rows_identical(spark, docs, tmp_path):
     """staged_shingle_rows must be row-identical to shingle_hash_rows on
-    first call (compute+write) AND on cache hit (read), and the staged
-    directory must exist after the first call."""
+    first call (compute+write) AND on a memo hit (read), and the memo
+    entry must exist after the first call."""
     import os
 
+    docs = _file_copy(spark, docs, tmp_path)
+    before = _staged_keys("shingle_rows_k5_")
     direct = {(r.doc_id, r._sh)
               for r in D.shingle_hash_rows(docs, "text", "doc_id", 5).collect()}
-    root = str(tmp_path / "stage")
     first = {(r.doc_id, r._sh)
-             for r in D.staged_shingle_rows(docs, k=5, cache_root=root).collect()}
+             for r in D.staged_shingle_rows(docs, k=5).collect()}
     assert first == direct
-    staged_dirs = [e for e in os.listdir(root) if e.startswith("shingle_rows_k5_")]
-    assert len(staged_dirs) == 1
+    new = _staged_keys("shingle_rows_k5_") - before
+    assert len(new) == 1
+    from fossa_spark import sources
+
+    assert os.path.isdir(sources._STAGED[new.pop()][0])
     hit = {(r.doc_id, r._sh)
-           for r in D.staged_shingle_rows(docs, k=5, cache_root=root).collect()}
+           for r in D.staged_shingle_rows(docs, k=5).collect()}
     assert hit == direct
+    assert len(_staged_keys("shingle_rows_k5_") - before) == 1
 
 
 def test_pq_topk_full_shortlist_is_exact(vecs):
@@ -866,16 +879,19 @@ def test_staged_simhash_table_equivalence(spark, docs, tmp_path):
     """staged_simhash_table must be row-identical to the direct signature
     pass, and simhash_pairs(sigs=staged) must equal the unstaged pairs
     (the sh_rows-style override contract, round 8)."""
+    docs = _file_copy(spark, docs, tmp_path)
+    before = _staged_keys("simhash_tab_")
     direct = sorted(map(tuple, D.simhash_table(docs).collect()))
-    staged_df = D.staged_simhash_table(docs, cache_root=str(tmp_path / "c"))
+    staged_df = D.staged_simhash_table(docs)
     staged = sorted(map(tuple, staged_df.collect()))
     assert staged == direct
+    assert len(_staged_keys("simhash_tab_") - before) == 1
     p1 = sorted(map(tuple, D.simhash_pairs(docs, max_hamming=3).collect()))
     p2 = sorted(map(tuple, D.simhash_pairs(
-        docs, max_hamming=3,
-        sigs=D.staged_simhash_table(docs, cache_root=str(tmp_path / "c")),
+        docs, max_hamming=3, sigs=D.staged_simhash_table(docs),
     ).collect()))
     assert p1 == p2
+    assert len(_staged_keys("simhash_tab_") - before) == 1, "second call hits"
 
 
 def test_quality_lr_learns_and_composes(spark):

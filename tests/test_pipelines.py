@@ -58,3 +58,29 @@ def test_pipeline_transform_drops_near_dups(spark):
         assert not (r.id_a in kept and r.id_b in kept), (
             f"near-dup pair ({r.id_a},{r.id_b}) both kept"
         )
+
+
+def test_pipeline_build_without_near_duplicates(spark, tmp_path):
+    """A corpus with no near-duplicate pairs: the near-dedup jobs find no
+    candidates, and build() must still report docs_in/docs_out from its
+    single write pass (it used to raise from Observation.get)."""
+    from pyspark.sql import functions as F
+
+    from fossa_spark.llm.dedup import minhash_lsh_dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    paired = {i for r in minhash_lsh_dedup(docs, threshold=0.5).collect()
+              for i in (r.id_a, r.id_b)}
+    ids = [r.doc_id for r in docs.select("doc_id").orderBy("doc_id").collect()
+           if r.doc_id not in paired][:70]
+    docs.filter(F.col("doc_id").isin(ids)).write.parquet(
+        str(tmp_path / "in" / "documents.parquet")
+    )
+    p = TrainingDataPipeline(spark=spark)
+    with connector_resolver.context(data=str(tmp_path / "in"),
+                                    out=str(tmp_path / "out")):
+        stats = p.build()
+    assert stats["docs_in"] == 70
+    assert 0 < stats["docs_out"] <= 70
+    out = spark.read.parquet(f"{tmp_path}/out/clean_docs")
+    assert out.count() == stats["docs_out"]

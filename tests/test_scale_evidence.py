@@ -265,12 +265,13 @@ def test_incremental_index_append_roundtrip(spark, skewed_docs, tmp_path):
 
 def test_staged_minhash_index_equivalence(spark, skewed_docs, tmp_path):
     """staged_minhash_index (round 7): the staged copy must (a) probe
-    IDENTICALLY to a fresh build, (b) keep the staged cache IMMUTABLE
-    under per-run appends (each run mutates its own copy), (c) keep the
+    IDENTICALLY to a fresh build, (b) keep the memo entry IMMUTABLE
+    under appends (each call mutates its own linked copy), (c) keep the
     bucketed zero-shuffle probe property on the copied tables, and
-    (d) fingerprint derived (filtered) corpora apart from their base."""
-    import os
+    (d) key derived (filtered) corpora apart from their base."""
     from pathlib import Path
+
+    from fossa_spark import sources
 
     prefixes = ("t_fresh2", "t_st1", "t_st2", "t_stf")
     for p in prefixes:
@@ -281,12 +282,14 @@ def test_staged_minhash_index_equivalence(spark, skewed_docs, tmp_path):
         str(tmp_path / "corpus")
     )
     corpus = spark.read.parquet(str(tmp_path / "corpus"))
-    cache = str(tmp_path / "cache")
 
+    def new_entries() -> list:
+        return [k for k in sources._STAGED
+                if k not in seen and k.startswith("minhash_idx_")]
+
+    seen = set(sources._STAGED)
     D.build_minhash_index(corpus, "t_fresh2", str(tmp_path / "fresh"))
-    D.staged_minhash_index(
-        corpus, spark, "t_st1", str(tmp_path / "run1"), cache_root=cache
-    )
+    D.staged_minhash_index(corpus, spark, "t_st1", str(tmp_path / "run1"))
     batch = spark.createDataFrame(
         [
             (9001, "quick brown fox jumps over the lazy dog near the quiet "
@@ -300,8 +303,8 @@ def test_staged_minhash_index_equivalence(spark, skewed_docs, tmp_path):
     staged = sorted(map(tuple, D.incremental_dedup(batch, spark, "t_st1").collect()))
     assert fresh == staged, f"staged probe diverged:\n{fresh}\nvs\n{staged}"
 
-    entries = [e for e in os.listdir(cache) if e.startswith("minhash_idx_")]
-    assert len(entries) == 1, entries
+    assert len(new_entries()) == 1, new_entries()
+    entry = sources._STAGED[new_entries()[0]][0]
 
     def snap(d):
         return sorted(
@@ -310,15 +313,14 @@ def test_staged_minhash_index_equivalence(spark, skewed_docs, tmp_path):
             if p.is_file()
         )
 
-    before = snap(cache)
-    # second run: cache hit into its own prefix/work_dir, then append —
-    # the cache bytes must not move
-    D.staged_minhash_index(
-        corpus, spark, "t_st2", str(tmp_path / "run2"), cache_root=cache
-    )
+    before = snap(entry)
+    # second call: memo hit (no new entry) into its own prefix/work_dir,
+    # then append — the entry's bytes must not move
+    D.staged_minhash_index(corpus, spark, "t_st2", str(tmp_path / "run2"))
+    assert len(new_entries()) == 1, "second call must hit the memo"
     novel = batch.filter(F.col("doc_id") == 9002)
     D.append_to_minhash_index(novel, spark, "t_st2")
-    assert snap(cache) == before, "per-run append leaked into the staged cache"
+    assert snap(entry) == before, "an append leaked into the memo entry"
     # run 2 now sees the appended doc; run 1's independent copy does not
     day2 = spark.createDataFrame(
         [(9200, "completely novel content about quantum chromodynamics "
@@ -344,14 +346,13 @@ def test_staged_minhash_index_equivalence(spark, skewed_docs, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
                        str(64 * 1024 * 1024))
 
-    # a FILTERED variant of the same files fingerprints separately (the
-    # analyzed-plan component): staging it adds a second cache entry
+    # a FILTERED variant of the same files keys separately (the
+    # analyzed-plan component): staging it adds a second memo entry
     D.staged_minhash_index(
         corpus.filter(F.col("doc_id") % 2 == 0), spark, "t_stf",
-        str(tmp_path / "runf"), cache_root=cache,
+        str(tmp_path / "runf"),
     )
-    entries = [e for e in os.listdir(cache) if e.startswith("minhash_idx_")]
-    assert len(entries) == 2, entries
+    assert len(new_entries()) == 2, new_entries()
     for p in prefixes:
         for t in ("bands", "shingles", "sizes", "meta"):
             spark.sql(f"DROP TABLE IF EXISTS {p}_{t}")
@@ -433,12 +434,11 @@ def test_ivf_index_lifecycle(spark, tmp_path):
     )
     assert memory == persisted, f"persisted probe diverged\n{memory}\n{persisted}"
 
-    # the STAGED copy probes identically too (stage → cache-hit → copy)
+    # the STAGED copy probes identically too (memo build → linked copy)
     for t in ("cells", "centroids", "meta"):
         spark.sql(f"DROP TABLE IF EXISTS t_ivfs_{t}")
     S.staged_ivf_index(
         c, spark, "t_ivfs", str(tmp_path / "ivfs"), n_centroids=16,
-        cache_root=str(tmp_path / "ivf_cache"),
     )
     staged = sorted(
         map(tuple, S.ivf_index_topk(q, spark, "t_ivfs", k=5, nprobe=4).collect())
@@ -619,13 +619,15 @@ def test_locality_subblock_recall_vs_random_split_sf1(spark):
     assert n_loc >= n_rnd, (n_loc, n_rnd)
 
 
-def test_stage_files_serves_identical_bytes_and_falls_back(spark, tmp_path):
-    """stage_files (round 8): (a) first call builds into the cache and
-    serves; (b) second call with the same fingerprint serves the SAME
-    bytes WITHOUT re-running the builder; (c) hard links are the default
-    serve (same inode as the cache — metadata-cost staging); (d) a
-    builder that writes nothing (no marker) degrades to a direct build
-    into the work dir."""
+def test_stage_files_serves_identical_bytes_and_falls_back(spark, tmp_path, caplog):
+    """stage_files (round 8): (a) the first call builds the memo entry
+    and serves it; (b) a second call with the same key serves the SAME
+    bytes WITHOUT re-running the builder; (c) hard links are the
+    default serve (same inode as the entry — metadata-cost staging) and
+    ``work_dir=None`` returns the entry itself; (d) a params change
+    rebuilds; (e) a failing builder degrades to a direct build into the
+    work dir, with a logged warning."""
+    import logging
     import os
 
     from fossa_spark.queries._util import load
@@ -633,6 +635,7 @@ def test_stage_files_serves_identical_bytes_and_falls_back(spark, tmp_path):
     from tests.conftest import SF_DIR
 
     d = load(spark, SF_DIR, "documents")
+    tag = tmp_path.name  # a key no earlier call in this process built
     calls = []
 
     def build(into):
@@ -641,29 +644,27 @@ def test_stage_files_serves_identical_bytes_and_falls_back(spark, tmp_path):
         with open(os.path.join(into, "artifact.bin"), "wb") as fh:
             fh.write(b"payload-v1")
 
-    root = str(tmp_path / "cache")
     w1, w2 = str(tmp_path / "w1"), str(tmp_path / "w2")
     os.makedirs(w1); os.makedirs(w2)
-    stage_files(d, w1, cache_prefix="t_sf", params=["v1"], build=build,
-                cache_root=root)
-    stage_files(d, w2, cache_prefix="t_sf", params=["v1"], build=build,
-                cache_root=root)
-    assert len(calls) == 1, "second call must hit the cache"
+    assert stage_files(d, w1, cache_prefix="t_sf", params=[tag, "v1"],
+                       build=build) == w1
+    stage_files(d, w2, cache_prefix="t_sf", params=[tag, "v1"], build=build)
+    assert len(calls) == 1, "second call must hit the memo"
     p1, p2 = os.path.join(w1, "artifact.bin"), os.path.join(w2, "artifact.bin")
     assert open(p1, "rb").read() == open(p2, "rb").read() == b"payload-v1"
-    # linked serve: same inode as the cached copy
-    cached = next(
-        os.path.join(root, e, "artifact.bin")
-        for e in os.listdir(root) if e.startswith("t_sf_")
-    )
-    assert os.stat(p1).st_ino == os.stat(cached).st_ino
-    # deleting a linked work copy never touches the cache
+    # read-only serve: the entry itself, no build
+    entry = stage_files(d, None, cache_prefix="t_sf", params=[tag, "v1"],
+                        build=build)
+    assert len(calls) == 1 and entry == calls[0]
+    staged = os.path.join(entry, "artifact.bin")
+    # linked serve: same inode as the entry's file
+    assert os.stat(p1).st_ino == os.stat(staged).st_ino
+    # deleting a linked work copy never touches the entry
     os.unlink(p1)
-    assert open(cached, "rb").read() == b"payload-v1"
-    # params change the fingerprint → rebuild
+    assert open(staged, "rb").read() == b"payload-v1"
+    # params change the key → rebuild
     w3 = str(tmp_path / "w3"); os.makedirs(w3)
-    stage_files(d, w3, cache_prefix="t_sf", params=["v2"], build=build,
-                cache_root=root)
+    stage_files(d, w3, cache_prefix="t_sf", params=[tag, "v2"], build=build)
     assert len(calls) == 2
     # a failing builder degrades to a direct build (the fallback path)
     w4 = str(tmp_path / "w4"); os.makedirs(w4)
@@ -675,9 +676,12 @@ def test_stage_files_serves_identical_bytes_and_falls_back(spark, tmp_path):
             raise RuntimeError("first build blows up")
         build(into)
 
-    stage_files(d, w4, cache_prefix="t_sf2", params=["v1"], build=flaky,
-                cache_root=root)
+    with caplog.at_level(logging.WARNING, logger="fossa_spark.sources"):
+        stage_files(d, w4, cache_prefix="t_sf2", params=[tag, "v1"],
+                    build=flaky)
     assert os.path.exists(os.path.join(w4, "artifact.bin"))
+    assert any("t_sf2" in r.getMessage() and "first build blows up" in r.getMessage()
+               for r in caplog.records), caplog.text
 
 
 def test_compact_exact_index_invariance(spark, skewed_docs, tmp_path):
@@ -854,12 +858,12 @@ def test_compact_ivf_index_invariance(spark, tmp_path):
 def test_stage_fingerprint_robust_to_persist(spark, tmp_path):
     """Round 14 regression: DataFrame.inputFiles() consults the plan
     WITH cache substitution, so a persist-marked relation reports zero
-    input files — stage_files then silently fell back to a per-run
-    direct build, disabling the cross-run cache for any caller that
-    persisted its corpus for multi-consumer reuse (staged_ivf_index
-    measured 0.6 s → 7.3 s per run).  _corpus_input_stats must return
-    the same (files, stats) fingerprint either way, and a persisted
-    corpus must HIT the cache entry a non-persisted one created."""
+    input files — stage_files then silently fell back to a direct build
+    for any caller that persisted its corpus for multi-consumer reuse
+    (staged_ivf_index measured 0.6 s → 7.3 s per run).
+    _corpus_input_stats must return the same (files, stats) either way,
+    and a persisted corpus must HIT the memo entry a non-persisted one
+    created."""
     import os
 
     from pyspark.sql import functions as F
@@ -879,9 +883,9 @@ def test_stage_fingerprint_robust_to_persist(spark, tmp_path):
     try:
         fp_plain = _corpus_input_stats(plain)
         fp_cached = _corpus_input_stats(cached)
-        assert fp_plain[0], "fingerprint must see the parquet input files"
+        assert fp_plain[0], "the key must see the parquet input files"
         assert fp_plain == fp_cached, (
-            "persist() must not change the staging fingerprint"
+            "persist() must not change the staging key"
         )
 
         calls = []
@@ -892,16 +896,14 @@ def test_stage_fingerprint_robust_to_persist(spark, tmp_path):
             with open(os.path.join(into, "a.bin"), "wb") as fh:
                 fh.write(b"x")
 
-        root = str(tmp_path / "cache")
+        params = [tmp_path.name, "v1"]
         w1, w2 = str(tmp_path / "w1"), str(tmp_path / "w2")
         os.makedirs(w1)
         os.makedirs(w2)
-        stage_files(plain, w1, cache_prefix="t_pfp", params=["v1"],
-                    build=build, cache_root=root)
-        stage_files(cached, w2, cache_prefix="t_pfp", params=["v1"],
-                    build=build, cache_root=root)
+        stage_files(plain, w1, cache_prefix="t_pfp", params=params, build=build)
+        stage_files(cached, w2, cache_prefix="t_pfp", params=params, build=build)
         assert len(calls) == 1, (
-            "a persisted corpus must hit the cache entry the plain "
+            "a persisted corpus must hit the memo entry the plain "
             "corpus created, not fall back to a direct build"
         )
     finally:
